@@ -24,6 +24,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from flight_data_pipeline_spark.operators.quality import (
@@ -32,12 +33,12 @@ from flight_data_pipeline_spark.operators.quality import (
     valid_intensity,
     valid_timestamp,
 )
+from flight_data_pipeline_spark.session import local_frame
 from flight_data_pipeline_spark.sinks import AuditSink, TelemetrySink
 from flight_data_pipeline_spark.sources.rest_json import (
     FUELS,
-    parse_generation_mix,
-    parse_intensity,
-    payload_df,
+    generation_mix_fields,
+    intensity_fields,
     retry_with_backoff,
 )
 
@@ -65,30 +66,32 @@ TELEMETRY_COLS = ("timestamp", "overall_intensity",
                   *[f"fuel_{f}_perc" for f in FUELS])
 
 
-def _telemetry_batch_flagged(spark: SparkSession, intensity_payload: str,
-                             mix_payload: str,
+WINDOW_SCHEMA = T.StructType([T.StructField(n, T.StringType())
+                              for n in ("window_key", "int_payload", "mix_payload")])
+
+
+def _telemetry_batch_flagged(spark: SparkSession,
+                             windows: list[tuple[str | None, str, str]],
                              now: Column | None = None) -> DataFrame:
-    """Parse both payloads and zip them into telemetry rows — the
-    implicit J2 join (etl_job.py:199-200,249-259): the reference pairs
-    the two single-record fetches of the same half-hour by position.
-    For single-payload runs this is a 1×1 cross join (trivially
-    broadcast); multi-window batches would join on window_start.
+    """Parse (window_key, intensity_payload, mix_payload) rows into
+    telemetry rows — the implicit J2 join (etl_job.py:199-200,249-259):
+    the reference pairs the two fetches of the same half-hour by
+    position; here they share one row of one local frame, so both
+    payloads parse in a single projection, with no join, and a run's
+    one window is one row in one partition.
 
     Carries the per-source ``record_found`` flags as ``int_found`` /
     ``mix_found`` instead of probing them eagerly, so the caller can
     fold missing-payload detection into whatever aggregate it already
     runs (run_pipeline does validation + both probes in ONE job)."""
-    intensity = parse_intensity(
-        payload_df(spark, [intensity_payload]), now=now
-    ).withColumnRenamed("record_found", "int_found")
-    mix = parse_generation_mix(
-        payload_df(spark, [mix_payload])
-    ).withColumnRenamed("record_found", "mix_found")
-    return intensity.crossJoin(mix).select(
-        F.col("window_start").alias("timestamp"),
-        F.col("overall_intensity"),
-        *[F.col(f"fuel_{f}_perc") for f in FUELS],
-        "int_found", "mix_found",
+    intensity = intensity_fields(F.col("int_payload"), now)
+    mix = generation_mix_fields(F.col("mix_payload"))
+    return local_frame(spark, windows, WINDOW_SCHEMA).select(
+        intensity["window_start"].alias("timestamp"),
+        intensity["overall_intensity"].alias("overall_intensity"),
+        *[mix[f"fuel_{f}_perc"].alias(f"fuel_{f}_perc") for f in FUELS],
+        intensity["record_found"].alias("int_found"),
+        mix["record_found"].alias("mix_found"),
     )
 
 
@@ -108,7 +111,7 @@ def build_telemetry_batch(spark: SparkSession, intensity_payload: str,
     side, returns clean telemetry columns. Both probes ride ONE
     aggregate action (previously two ``isEmpty`` jobs)."""
     flagged = _telemetry_batch_flagged(
-        spark, intensity_payload, mix_payload, now=now)
+        spark, [(None, intensity_payload, mix_payload)], now)
     probe = flagged.agg(
         F.bool_or(~F.col("int_found")).alias("missing_intensity"),
         F.bool_or(~F.col("mix_found")).alias("missing_mix"),
@@ -141,7 +144,7 @@ def run_pipeline(spark: SparkSession,
         intensity_payload = retry_with_backoff(fetch_intensity, sleep=sleep)()
         mix_payload = retry_with_backoff(fetch_mix, sleep=sleep)()
         flagged = _telemetry_batch_flagged(
-            spark, intensity_payload, mix_payload, now=now)
+            spark, [(None, intensity_payload, mix_payload)], now)
 
         # validate: flag, don't drop (etl_job.py:213-218). Missing-
         # payload probes and the partial count fold into ONE aggregate
@@ -188,35 +191,22 @@ def build_telemetry_batch_multi(
         spark: SparkSession,
         pairs: list[tuple[str, str, str]]) -> DataFrame:
     """Backfill form of the batch builder: N window-aligned payload
-    pairs — the J2 zip (etl_job.py:199-200) as a real equi-join once
-    more than one window is in flight.
+    pairs, one ``_telemetry_batch_flagged`` row each.
 
-    ``pairs`` is [(window_key, intensity_payload, mix_payload)]; the
-    injected window key is the join key, so a missing/mismatched side
-    drops that window instead of mis-pairing a cross product. Records
-    whose payload carried no data are dead-lettered (dropped), the
-    multi-window analogue of the single-run raise — callers that need
-    the count difference compare input vs output windows.
+    ``pairs`` is [(window_key, intensity_payload, mix_payload)]; each
+    tuple is one window, so a repeated window key yields one row per
+    tuple, never a cross product of its payloads. Records whose payload
+    carried no data are dead-lettered (dropped), the multi-window
+    analogue of the single-run raise — callers that need the count
+    difference compare input vs output windows. A missing ``from``
+    parses to NULL here rather than "now".
 
-    Scale shape: both parses are map-side; the equi-join keys on the
-    window id (tiny keyspace ⇒ broadcast-able side if one source lags).
+    Scale shape: one map-side projection of one local frame, no
+    shuffle; the file-landing path applies the same parsers to
+    ``spark.read.text``.
     """
-    base = spark.createDataFrame(
-        pairs, "window_key string, int_payload string, mix_payload string")
-    intensity = parse_intensity(
-        base.select("window_key", F.col("int_payload").alias("payload")),
-        now=F.lit(None).cast("timestamp"), keep=("window_key",),
-    ).withColumnRenamed("record_found", "int_found")
-    mix = parse_generation_mix(
-        base.select("window_key", F.col("mix_payload").alias("payload")),
-        keep=("window_key",),
-    ).withColumnRenamed("record_found", "mix_found")
     return (
-        intensity.join(mix, "window_key")
+        _telemetry_batch_flagged(spark, pairs, F.lit(None).cast("timestamp"))
         .where(F.col("int_found") & F.col("mix_found"))
-        .select(
-            F.col("window_start").alias("timestamp"),
-            F.col("overall_intensity"),
-            *[F.col(f"fuel_{f}_perc") for f in FUELS],
-        )
+        .select(*TELEMETRY_COLS)
     )

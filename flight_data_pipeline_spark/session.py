@@ -18,7 +18,8 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Settings that must be present at session build time.
 _BUILD_CONF: dict[str, str] = {
@@ -172,12 +173,14 @@ def loop_materialization_conf(spark: SparkSession):
         return
     old = spark.conf.get("spark.sql.adaptive.enabled", "true")
     _LOOP_CONF_DEPTH = 1
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
+        # inside the try: a failing set must not leave the depth
+        # latched, or every later scope would run as a nested no-op
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
         _LOOP_CONF_DEPTH = 0
+        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def dump_loop_plan(frame, name: str) -> None:
@@ -203,6 +206,29 @@ def dump_loop_plan(frame, name: str) -> None:
         .ExplainMode.fromString("formatted"))
     with open(path, "w") as f:
         f.write(plan.strip() + "\n")
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: StructType) -> DataFrame:
+    """Driver-side rows as one local frame, built through Arrow.
+
+    ``createDataFrame`` on a Python list parallelizes a Python RDD over
+    ``defaultParallelism`` partitions, so every action on it runs a
+    task per partition; an Arrow table becomes a ``LocalRelation`` the
+    JVM decodes itself — no Python worker, one partition for a
+    one-row batch, and projections over it fold at optimization time.
+    The Arrow path is taken for a ``pyarrow.Table`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+
+    Arrow reads a naive datetime in the session time zone where the
+    pickled path reads it in the host's; callers that need the latter
+    pass aware datetimes (``dt.astimezone()``)."""
+    import pyarrow as pa  # deferred: keeps import-time work off the engine
+
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.table({f.name: pa.array(list(c))
+                      for f, c in zip(schema.fields, cols)})
+    return spark.createDataFrame(table, schema)
 
 
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:

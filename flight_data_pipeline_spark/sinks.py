@@ -22,6 +22,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from flight_data_pipeline_spark.operators.dedup import dedup_against_sink
+from flight_data_pipeline_spark.session import local_frame
 
 # grid_telemetry DDL analogue (etl_job.py:141-151). BIGSERIAL id is
 # omitted: Spark has no serial generator and the reference never
@@ -60,7 +61,7 @@ class ParquetSink:
         try:
             return self.spark.read.schema(self.schema).parquet(self.path)
         except Exception:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
 
     def append(self, df: DataFrame) -> None:
         (df.select(*[F.col(f.name).cast(f.dataType) for f in self.schema.fields])
@@ -124,7 +125,7 @@ class TelemetrySink(ParquetSink):
             return self.spark.read.parquet(self.path).select(
                 *[f.name for f in self.schema.fields])
         except Exception:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
 
     def read_range(self, start_date: str, end_date: str) -> DataFrame:
         """Date-bounded read that filters on the PARTITION column
@@ -144,7 +145,7 @@ class TelemetrySink(ParquetSink):
                 .select(*[f.name for f in self.schema.fields])
             )
         except Exception:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
 
     def append(self, df: DataFrame) -> None:
         if not self.partition_by_day:
@@ -202,9 +203,12 @@ class AuditSink(ParquetSink):
                 execution_time_ms: int, error_message: str | None = None,
                 run_timestamp=None) -> None:
         try:
-            row = [(run_timestamp, status, rows_inserted,
+            # aware, so Arrow reads an explicit naive time as host-local
+            # time, the zone collect() returns it in (see local_frame)
+            ts = None if run_timestamp is None else run_timestamp.astimezone()
+            row = [(ts, status, rows_inserted,
                     int(execution_time_ms), error_message)]
-            df = self.spark.createDataFrame(row, AUDIT_SCHEMA)
+            df = local_frame(self.spark, row, AUDIT_SCHEMA)
             if run_timestamp is None:
                 df = df.withColumn("run_timestamp", F.current_timestamp())
             self.append(df)

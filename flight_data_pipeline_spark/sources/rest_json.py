@@ -2,11 +2,12 @@
 
 The reference fetches two carbon-intensity API payloads driver-side
 (etl_job.py:96-137) and flattens them imperatively. Here the *parsing*
-is fully declarative — raw JSON strings become typed DataFrames via
-``from_json`` + higher-order array functions — so the identical plan
-ingests one payload (driver-fetched, ``spark.createDataFrame``) or a
-100 TB landing zone of payload files (``spark.read.text`` /
-``readStream``): the JSON never touches driver Python.
+is fully declarative — raw JSON strings become typed columns via
+``from_json`` + higher-order array functions — so the identical
+expressions ingest a driver-fetched batch (one Arrow-built local frame,
+see ``session.local_frame``) or a 100 TB landing zone of payload files
+(``spark.read.text`` / ``readStream``): the JSON never touches driver
+Python.
 
 Fetching stays a thin driver-side layer with the reference's retry
 envelope (3 attempts, 2·2^n backoff — etl_job.py:32-49), injectable
@@ -28,6 +29,7 @@ from flight_data_pipeline_spark.functions.scalars import (
     default_to,
     parse_iso8601,
 )
+from flight_data_pipeline_spark.session import local_frame
 
 # --- retry envelope (etl_job.py:32-49) --------------------------------------
 
@@ -109,10 +111,10 @@ FUELS = ("gas", "nuclear", "wind", "solar")
 
 # --- parsers (raw json string column → typed columns) ------------------------
 
-def parse_intensity(df: DataFrame, json_col: str = "payload",
-                    now: Column | None = None,
-                    keep: tuple[str, ...] = ()) -> DataFrame:
-    """Intensity payload → (overall_intensity, window_start, window_end).
+def intensity_fields(payload: Column,
+                     now: Column | None = None) -> dict[str, Column]:
+    """Intensity payload → overall_intensity, window_start, window_end
+    and record_found, as unaliased columns keyed by name.
 
     Reference semantics preserved exactly (etl_job.py:101-110):
     - unwrap ``data[0]`` (P1 nested-struct projection);
@@ -125,24 +127,23 @@ def parse_intensity(df: DataFrame, json_col: str = "payload",
     """
     now = F.current_timestamp() if now is None else now
     # F.get (not [0]): ANSI-safe on empty `data`, yielding NULL columns
-    rec = F.get(F.from_json(F.col(json_col), INTENSITY_SCHEMA)["data"], 0)
-    return df.select(
-        *keep,
-        coalesce_falsy(rec["intensity"]["actual"], rec["intensity"]["forecast"])
-        .alias("overall_intensity"),
-        default_to(parse_iso8601(rec["from"]), now).alias("window_start"),
-        parse_iso8601(rec["to"]).alias("window_end"),
+    rec = F.get(F.from_json(payload, INTENSITY_SCHEMA)["data"], 0)
+    return {
+        "overall_intensity": coalesce_falsy(rec["intensity"]["actual"],
+                                            rec["intensity"]["forecast"]),
+        "window_start": default_to(parse_iso8601(rec["from"]), now),
+        "window_end": parse_iso8601(rec["to"]),
         # empty/missing `data` is an error upstream (etl_job.py:102-103
         # raises ValueError) — surfaced as a flag so callers can raise
         # without a second scan
-        rec.isNotNull().alias("record_found"),
-    )
+        "record_found": rec.isNotNull(),
+    }
 
 
-def parse_generation_mix(df: DataFrame, json_col: str = "payload",
-                         keep: tuple[str, ...] = ()) -> DataFrame:
-    """Generation-mix payload → one double column per fuel
-    (fuel_gas_perc, fuel_nuclear_perc, fuel_wind_perc, fuel_solar_perc).
+def generation_mix_fields(payload: Column) -> dict[str, Column]:
+    """Generation-mix payload → one double per fuel (fuel_gas_perc,
+    fuel_nuclear_perc, fuel_wind_perc, fuel_solar_perc) and
+    record_found, as unaliased columns keyed by name.
 
     Reference semantics (etl_job.py:117-135):
     - tolerate ``data`` as list or dict (etl_job.py:121) — both
@@ -152,28 +153,43 @@ def parse_generation_mix(df: DataFrame, json_col: str = "payload",
     - missing fuel or missing perc → 0.0 (etl_job.py:127-128).
     """
     as_list = F.get(
-        F.from_json(F.col(json_col), GENERATION_SCHEMA_LIST)["data"], 0
+        F.from_json(payload, GENERATION_SCHEMA_LIST)["data"], 0
     )["generationmix"]
-    as_dict = F.from_json(F.col(json_col), GENERATION_SCHEMA_DICT)["data"]["generationmix"]
+    as_dict = F.from_json(payload, GENERATION_SCHEMA_DICT)["data"]["generationmix"]
     mix = F.coalesce(as_list, as_dict)
 
     def fuel_perc(fuel: str) -> Column:
         matches = F.filter(mix, lambda e: F.lower(F.coalesce(e["fuel"], F.lit(""))) == fuel)
         # F.get: first match or NULL (ANSI-safe on no-match), then 0.0 default
-        return F.coalesce(F.get(matches, 0)["perc"], F.lit(0.0)).alias(f"fuel_{fuel}_perc")
+        return F.coalesce(F.get(matches, 0)["perc"], F.lit(0.0))
 
-    return df.select(
-        *keep,
-        *[fuel_perc(f) for f in FUELS],
+    return {
+        **{f"fuel_{f}_perc": fuel_perc(f) for f in FUELS},
         # missing `data` raises upstream (etl_job.py:118-119)
-        mix.isNotNull().alias("record_found"),
-    )
+        "record_found": mix.isNotNull(),
+    }
+
+
+def parse_intensity(df: DataFrame, json_col: str = "payload",
+                    now: Column | None = None,
+                    keep: tuple[str, ...] = ()) -> DataFrame:
+    """``intensity_fields`` of ``json_col`` as a frame, after ``keep``."""
+    fields = intensity_fields(F.col(json_col), now)
+    return df.select(*keep, *[c.alias(n) for n, c in fields.items()])
+
+
+def parse_generation_mix(df: DataFrame, json_col: str = "payload",
+                         keep: tuple[str, ...] = ()) -> DataFrame:
+    """``generation_mix_fields`` of ``json_col`` as a frame, after ``keep``."""
+    fields = generation_mix_fields(F.col(json_col))
+    return df.select(*keep, *[c.alias(n) for n, c in fields.items()])
 
 
 def payload_df(spark: SparkSession, payloads: list[str]) -> DataFrame:
-    """Wrap raw JSON payload strings as a DataFrame (driver-side
-    single-record path; the file-landing path is spark.read.text)."""
-    return spark.createDataFrame([(p,) for p in payloads], "payload string")
+    """Wrap raw JSON payload strings as a one-column local frame
+    (driver-side path; the file-landing path is spark.read.text)."""
+    return local_frame(spark, [(p,) for p in payloads],
+                       T.StructType([T.StructField("payload", T.StringType())]))
 
 
 def fetch_json(url: str, timeout: float = 10.0) -> str:

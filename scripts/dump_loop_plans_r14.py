@@ -31,13 +31,16 @@ def main():
         outdir = os.path.join(REPO, "plans", "r14",
                               f"loops_{tag}", name)
         os.environ["SPARK_GRAFT_LOOP_PLAN_DIR"] = outdir
-        # loop bodies only plan during execution — run through the
-        # noop sink, same as the bench
-        qs[name](spark, SF_DIR).write.format("noop").mode(
-            "overwrite").save()
+        try:
+            # loop bodies only plan during execution — run through the
+            # noop sink, same as the bench
+            qs[name](spark, SF_DIR).write.format("noop").mode(
+                "overwrite").save()
+        finally:
+            # a failing query must not leave its dump dir to the next
+            os.environ.pop("SPARK_GRAFT_LOOP_PLAN_DIR", None)
         wrote = sorted(os.listdir(outdir)) if os.path.isdir(outdir) else []
         print(f"{name}: {wrote}")
-    os.environ.pop("SPARK_GRAFT_LOOP_PLAN_DIR", None)
 
 
 if __name__ == "__main__":

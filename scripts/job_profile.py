@@ -30,10 +30,10 @@ def rest(spark, path: str):
 
 
 def parse_ts(s: str) -> float:
-    # "2026-08-18T05:10:11.123GMT"
+    # "2026-08-18T05:10:11.123GMT", or "2026-08-18T05:10:11GMT" when
+    # the milliseconds are zero
     from datetime import datetime
-    return datetime.strptime(s.replace("GMT", ""),
-                             "%Y-%m-%dT%H:%M:%S.%f").timestamp()
+    return datetime.fromisoformat(s.replace("GMT", "")).timestamp()
 
 
 def main():
@@ -68,12 +68,13 @@ def main():
                   and s["status"] != "SKIPPED"]
         stage_wall = 0.0
         task_time = 0.0
+        untimed = 0
         for s in stages:
             try:
                 stage_wall += (parse_ts(s["completionTime"])
                                - parse_ts(s["firstTaskLaunchedTime"]))
             except (KeyError, ValueError):
-                pass
+                untimed += 1
             task_time += s.get("executorRunTime", 0) / 1000.0
         rec = {
             "wall_sec": round(wall, 3),
@@ -81,6 +82,8 @@ def main():
             "n_stages": len(stages),
             "n_tasks": sum(s.get("numCompleteTasks", 0) for s in stages),
             "stage_wall_sec": round(stage_wall, 3),
+            # stages left out of stage_wall_sec (no or unparseable times)
+            "n_stages_untimed": untimed,
             "task_time_sec": round(task_time, 3),
             "driver_gap_sec": round(wall - stage_wall, 3),
         }

@@ -6,6 +6,9 @@ actually get those behaviors — not just that the configs are set."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
+
+from flight_data_pipeline_spark import session
 
 
 def test_aqe_splits_skewed_sort_merge_join(spark):
@@ -84,3 +87,28 @@ def test_aqe_coalesces_small_shuffle_partitions(spark):
             conf.unset("spark.sql.adaptive.enabled")
         else:
             conf.set("spark.sql.adaptive.enabled", old_en)
+
+
+def test_loop_conf_scope_recovers_from_a_failing_set(spark, monkeypatch):
+    """A scope whose ``conf.set`` raises must not leave the reentrancy
+    depth latched: a later scope still turns AQE off, then restores it."""
+    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    real_set = spark.conf.set
+    failures = []
+
+    def set_failing_once(k, v):
+        if not failures:
+            failures.append((k, v))
+            raise RuntimeError("conf.set failed")
+        real_set(k, v)
+
+    monkeypatch.setattr(spark.conf, "set", set_failing_once)
+    with pytest.raises(RuntimeError, match="conf.set failed"):
+        with session.loop_materialization_conf(spark):
+            pass
+    assert session._LOOP_CONF_DEPTH == 0
+    with session.loop_materialization_conf(spark):
+        assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key) == before

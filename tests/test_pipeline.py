@@ -206,6 +206,55 @@ class TestBatchJoin:
         assert row.timestamp.hour == 14
 
 
+class TestTaskBudget:
+    # Tasks one successful run into fresh sinks launches, measured on
+    # local[4] with 8 shuffle partitions: 8, one per job, as every
+    # ingest frame is one local partition. A batch built as a cross
+    # join of two 4-partition Python RDDs runs 64: three 16-task
+    # cartesian stages (the probe, the dedup count, the write) and more.
+    MAX_TASKS = 8
+
+    def test_successful_run_stays_within_task_budget(self, spark, paths):
+        sc = spark.sparkContext
+        group = "test-run-pipeline-task-budget"
+        sc.setJobGroup(group, "one run_pipeline call")
+        try:
+            res = run(spark, paths)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert (res.status, res.rows_inserted) == ("success", 1)
+        tracker = sc.statusTracker()
+        tasks = 0
+        for job in tracker.getJobIdsForGroup(group):
+            for stage in tracker.getJobInfo(job).stageIds:
+                info = tracker.getStageInfo(stage)
+                tasks += info.numCompletedTasks if info else 0
+        assert 0 < tasks <= self.MAX_TASKS
+
+
+class TestAuditTimestamp:
+    def test_explicit_run_timestamp_round_trips(self, spark, tmp_path):
+        """An explicit naive run_timestamp is host-local time, as a
+        collected timestamp is: it reads back unchanged whatever the
+        session time zone (Arrow alone would read it in the session
+        zone and shift it)."""
+        import datetime as dt
+
+        ts = dt.datetime(2025, 12, 9, 14, 30, 1, 123456)
+        key = "spark.sql.session.timeZone"
+        before = spark.conf.get(key)
+        try:
+            for i, zone in enumerate(("UTC", "Asia/Tokyo")):
+                spark.conf.set(key, zone)
+                audit = AuditSink(spark, str(tmp_path / f"audit{i}"))
+                audit.log_run("success", 1, 5, run_timestamp=ts)
+                row = audit.read().first()
+                assert row.run_timestamp == ts, zone
+        finally:
+            spark.conf.set(key, before)
+
+
 class TestEmptyPayloads:
     # etl_job.py:102-103,118-119 — empty/malformed payloads raise, the
     # run is audited as 'failure', and NO row reaches the sink
@@ -250,6 +299,23 @@ class TestMultiWindowBatch:
         assert sorted(rows) == [14, 15]  # bad windows dropped, not mis-paired
         assert rows[14].overall_intensity == 90.0 and rows[14].fuel_gas_perc == 40.0
         assert rows[15].overall_intensity == 80.0 and rows[15].fuel_gas_perc == 50.0
+
+    def test_repeated_window_key_pairs_by_tuple(self, spark):
+        """Windows pair by tuple, not by key: k tuples sharing a window
+        key give k rows, where a self-join on the key gave k²."""
+        from flight_data_pipeline_spark.pipeline import build_telemetry_batch_multi
+
+        pairs = [
+            ("w", json.dumps({"data": [{"from": f"2025-12-09T{h:02d}:00Z",
+                                        "intensity": {"actual": 10 * h}}]}),
+             json.dumps({"data": [{"generationmix": [
+                 {"fuel": "gas", "perc": float(h)}]}]}))
+            for h in (14, 15, 16)
+        ]
+        rows = build_telemetry_batch_multi(spark, pairs).collect()
+        assert sorted((r.timestamp.hour, r.overall_intensity, r.fuel_gas_perc)
+                      for r in rows) == [(14, 140.0, 14.0), (15, 150.0, 15.0),
+                                         (16, 160.0, 16.0)]
 
 
 class TestPartitionedSink:

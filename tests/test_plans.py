@@ -616,3 +616,35 @@ def test_html_and_warc_extraction_share_the_scan_discipline(spark):
                 in plan), q
         assert "ReadSchema: struct<doc_id:bigint>" in plan, q
         assert "text" not in plan.split("ReadSchema")[1][:200], q
+
+
+def test_ingest_batches_are_one_local_scan_without_joins(spark):
+    """Driver-fetched ingest batches are one Arrow-built local frame
+    whose row holds both payloads of a window: no cross join or
+    self-join pairs the two sources, and no parallelized Python RDD
+    (``applySchemaToPythonRDD``, planned as a LogicalRDD /
+    ``Scan ExistingRDD``) fans a one-row batch out over every core."""
+    import json
+
+    from flight_data_pipeline_spark.pipeline import (
+        _telemetry_batch_flagged,
+        build_telemetry_batch_multi,
+    )
+
+    def intensity(h):
+        return json.dumps({"data": [{"from": f"2025-12-09T{h:02d}:00Z",
+                                     "intensity": {"actual": 90}}]})
+
+    mix = json.dumps({"data": [{"generationmix": [
+        {"fuel": "gas", "perc": 45.5}]}]})
+    single = _telemetry_batch_flagged(spark, [(None, intensity(14), mix)])
+    multi = build_telemetry_batch_multi(
+        spark, [(f"w{h}", intensity(h), mix) for h in (14, 15, 16)])
+    for df in (single, multi):
+        plans = df._jdf.queryExecution().toString()
+        assert "CartesianProduct" not in plans
+        assert "BroadcastNestedLoopJoin" not in plans
+        assert "Join" not in plans
+        assert "LogicalRDD" not in plans and "ExistingRDD" not in plans
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    assert single.rdd.getNumPartitions() == 1
