@@ -1451,6 +1451,10 @@ def bm25_topk_from_index(spark: SparkSession, index_dir: str,
         F.sum("term_score_u").alias("bm25_u"),
         F.count("*").alias("n_terms"),
     )
+    # The top-k operator allocates a 2k-slot buffer per task up front,
+    # so an "everything" k (e.g. 10**9) would exhaust the heap; no query
+    # returns more rows than the index holds documents.
+    k = min(k, dl.count())
     return agg.orderBy(F.desc("bm25_u"), "doc_id").limit(k)
 
 
